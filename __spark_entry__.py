@@ -52,7 +52,6 @@ def _status_rank() -> dict[str, int]:
     ranks = {}
     for name in REGISTRY:
         e = status.get(name)
-        has_oracle = REGISTRY[name].oracle is not None
         if e is None:
             ranks[name] = (1, 0)  # never checked
         elif name in _REVERIFY_TOUCHED:
@@ -65,12 +64,6 @@ def _status_rank() -> dict[str, int]:
             # never-checked so this round's budget certifies the
             # rewrites (VERDICT r14 item 2).
             ranks[name] = (1, 1)
-        elif e.get("err") == "no_oracle" and not has_oracle:
-            # Deliberately oracle-less (pytest-law-pinned, not broken):
-            # park BEHIND the green tier so these don't eat a budget
-            # slot every round forever.  If a query later GAINS an
-            # oracle (has_oracle=True), it falls through to re-verify.
-            ranks[name] = (3, 0)
         elif e.get("err") or e.get("hash_match") is not True:
             ranks[name] = (0, 0)  # erred / mismatched: re-verify first
         else:
@@ -81,22 +74,10 @@ def _status_rank() -> dict[str, int]:
     return ranks
 
 
-# ROUND-14 NOTE: ALL NINE staged waves are ACTIVATED (r6 wave of 30
-# + r7 wave of 14 + r8..r13 waves of 23 each + r14 wave of 27) plus
-# the three r12 late-round clause round-trips; registry = 391.  The
-# r14 wave carries the four round-13 additions (QUALIFY, quantileGK,
-# snowflake-ID, ALTER-migration round-trips — VERDICT r12 #8).  The
-# 27 never-driver-checked r14 names rank first; the remaining ~23
-# budget slots rotate through the STALEST greens — the 14 r6-stale
-# queries clear THIS round and rotation moves into the r7 cohort.
-#
-# staged_r15.py (round 15) .. staged_r20.py (round 20) hold the
-# remaining waves, one per round, ALL built and parity-proven
-# (tests/test_staged_r{N}_parity.py + `python
-# scripts/strict_parity.py --staged`).  Each activates with
-# REGISTRY.update(staged_rN.STAGED_RN) in queries/__init__.py,
-# newest-last; the disjointness guard in each parity file flags any
-# collision.
+# Every registry query (391) is registered with
+# clickbom_spark.queries.query and carries a DuckDB oracle.  A new
+# query is one @query in a module imported by queries/__init__.py; it
+# has no CORRECTNESS row yet, so it ranks in the never-checked tier.
 
 # Queries rewritten by the r14/r15 optimization rounds whose driver
 # oracle row predates the rewrite (VERDICT r14 "Next round" item 2):
@@ -147,7 +128,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query; omitted for non-SQL-expressible ops."""
-    return {
-        name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None
-    }
+    """DuckDB-equivalent SQL per query (every registry query has one)."""
+    return {name: spec.oracle for name, spec in REGISTRY.items()}

@@ -17,7 +17,7 @@ paths that these plans read.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +43,6 @@ class PipelineConfig:
     include_patterns: str = ""
     exclude_patterns: str = ""
     license_mappings_path: str | None = None
-    extra: dict = field(default_factory=dict)
 
 
 def default_source_value(cfg: PipelineConfig) -> str:
@@ -105,7 +104,6 @@ def merge_pipeline(
     bucket_path: str,
     cfg: PipelineConfig,
     output_key: str = "",
-    deterministic: bool = True,
 ) -> DataFrame:
     """EP2: directory/bucket of SBOMs → deduped, source-tracked tuples.
 
@@ -121,7 +119,7 @@ def merge_pipeline(
     docs = M.cyclonedx_gate(docs)
     docs = docs.withColumn("source_ref", C.source_reference_expr())
     comps = C.cdx_components(docs, F.col("source_ref"))
-    comps = M.dedup_components(comps, deterministic=deterministic)
+    comps = M.dedup_components(comps)
     if cfg.license_mappings_path:
         mappings = C.load_license_mappings(spark, cfg.license_mappings_path)
         comps = C.map_unknown_licenses(comps, mappings)

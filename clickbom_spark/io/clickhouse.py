@@ -19,6 +19,7 @@ minimize ClickHouse merge work (storage sort key, entrypoint.sh:228).
 
 from __future__ import annotations
 
+import urllib.error
 import urllib.parse
 import urllib.request
 from collections.abc import Callable
@@ -31,6 +32,10 @@ Transport = Callable[[str, bytes | None], tuple[int, bytes]]
 
 class ClickHouseError(RuntimeError):
     pass
+
+
+def _reply_text(data: bytes) -> str:
+    return data.decode("utf-8", errors="replace").strip()
 
 
 def http_transport(url: str, username: str | None = None, password: str | None = None):
@@ -47,8 +52,14 @@ def http_transport(url: str, username: str | None = None, password: str | None =
         if body is not None:
             headers["Content-Type"] = "text/tab-separated-values"
         req = urllib.request.Request(full, data=body or b"", method="POST", headers=headers)
-        with urllib.request.urlopen(req, timeout=120) as resp:  # noqa: S310
-            return resp.status, resp.read()
+        try:
+            with urllib.request.urlopen(req, timeout=120) as resp:  # noqa: S310
+                return resp.status, resp.read()
+        except urllib.error.HTTPError as e:
+            # a 4xx/5xx reply is an answer, not a transport failure: hand
+            # back the status and ClickHouse's error text like any reply
+            with e:
+                return e.code, e.read()
 
     return send
 
@@ -71,7 +82,9 @@ class ClickHouseSink:
     def _exec(self, query: str, body: bytes | None = None) -> bytes:
         status, data = self.transport(query, body)
         if status != 200:
-            raise ClickHouseError(f"ClickHouse query failed ({status}): {query}")
+            raise ClickHouseError(
+                f"ClickHouse query failed ({status}): {query}\n{_reply_text(data)}"
+            )
         return data
 
     def table_exists(self) -> bool:
@@ -183,8 +196,10 @@ class ClickHouseSink:
                 f"INSERT INTO {target} (name, version, license, source) "
                 f"SETTINGS insert_deduplication_token='{token}' FORMAT TSV"
             )
-            status, _ = transport(insert_q, payload)
+            status, reply = transport(insert_q, payload)
             if status != 200:
-                raise ClickHouseError(f"ClickHouse INSERT failed with HTTP {status}")
+                raise ClickHouseError(
+                    f"ClickHouse INSERT failed with HTTP {status}: {_reply_text(reply)}"
+                )
 
         df.foreachPartition(send_partition)

@@ -15,18 +15,11 @@ Two shapes:
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 
 
-def write_components_lake(
-    components: DataFrame,
-    path: str,
-    mode: str = "append",
-    partition_by: tuple[str, ...] = ("source",),
-) -> None:
-    """Partitioned parquet lake of warehouse tuples.
+def write_components_lake(components: DataFrame, path: str) -> None:
+    """Partitioned parquet lake of warehouse tuples, appended to ``path``.
 
     Partitioning by ``source`` mirrors the LowCardinality(String)
     dictionary column (entrypoint.sh:225) and gives partition pruning
@@ -35,8 +28,8 @@ def write_components_lake(
     """
     (
         components.sortWithinPartitions("name", "version", "license")
-        .write.mode(mode)
-        .partitionBy(*partition_by)
+        .write.mode("append")
+        .partitionBy("source")
         .parquet(path)
     )
 
@@ -49,9 +42,3 @@ def write_sbom_document(doc_df: DataFrame, path: str, mode: str = "overwrite") -
     """
     doc_df.coalesce(1).write.mode(mode).json(path)
 
-
-def sbom_document_to_json(doc_df: DataFrame) -> str:
-    """Render the merged document as a canonical JSON string (driver-side;
-    single row by construction)."""
-    row = doc_df.collect()[0]
-    return json.dumps(row.asDict(recursive=True), indent=2)

@@ -107,21 +107,18 @@ def dedup_key_cols(df: DataFrame) -> DataFrame:
     )
 
 
-def dedup_components(df: DataFrame, deterministic: bool = False) -> DataFrame:
+def dedup_components(df: DataFrame) -> DataFrame:
     """U2: one row per (name, version, purl, source).
 
     Same-key duplicates of the 4-tuple collapse; the same component
     seen from two sources survives twice (source preservation —
     lib/sbom-merging.sh:356-363).
 
-    ``deterministic=True`` picks the canonically-smallest full row per
-    key (row_number over a to_json ordering) so golden tests are stable
-    even when duplicate keys carry different payloads; the default is
-    ``dropDuplicates`` (hash-aggregate keep-first, cheaper — no sort).
+    The kept row is the canonically-smallest full row per key
+    (row_number over a to_json ordering), so output is stable even
+    when duplicate keys carry different payloads.
     """
     df = dedup_key_cols(df)
-    if not deterministic:
-        return df.dropDuplicates(DEDUP_KEY)
     w = Window.partitionBy(*DEDUP_KEY).orderBy(F.to_json(F.struct(*df.columns)))
     return (
         df.withColumn("_rn", F.row_number().over(w))

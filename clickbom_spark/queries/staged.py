@@ -1,18 +1,11 @@
-"""Staged registry wave for round 6.
+"""Registry queries, round-6 cohort.
 
-Queries here are pytest-verified NOW (tests/test_staged_parity.py runs
-the same oracle-parity harness as tests/test_parity.py) but are held
-out of :data:`clickbom_spark.queries.REGISTRY` so the current round's
-driver correctness budget keeps rotating stale greens (VERDICT r4 §next
-item 1: new wave small, rotation first).  Round 6 activates the wave
-with one line in ``queries/__init__.py``::
+Every query here is registered with :func:`clickbom_spark.queries.query`
+and held to its DuckDB oracle by ``tests/test_parity.py``.
 
-    from clickbom_spark.queries import staged  # noqa: F401
-    REGISTRY.update(staged.STAGED)
-
-Each entry wraps an operator that already landed in ``ext/`` with full
-pytest coverage this round — the wrappers below only bind corpus
-columns and align output aliases with the oracle SQL.
+Each entry wraps an operator that lives in ``ext/`` with its own
+pytest coverage — the wrappers below only bind corpus columns and
+align output aliases with the oracle SQL.
 """
 
 from __future__ import annotations
@@ -22,18 +15,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from clickbom_spark.queries import QuerySpec, load
-
-STAGED: dict[str, QuerySpec] = {}
-
-
-def staged(name: str, oracle: str | None = None, description: str = "",
-           bench: bool = False):
-    def deco(fn):
-        STAGED[name] = QuerySpec(name, fn, oracle, description, bench)
-        return fn
-
-    return deco
+from clickbom_spark.queries import load, query
 
 
 _TMP = os.path.join(
@@ -72,7 +54,7 @@ def stage_single_parquet(df, path: str, mtime: int | None = None) -> None:
 # with the same > N/k cutoff is the ground truth.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_heavy_hitters",
     oracle="""
 WITH d AS (
@@ -119,7 +101,7 @@ def q_heavy_hitters(spark, sf_dir):
     return hh_lang.unionByName(hh_et).orderBy("tbl", "val")
 
 
-@staged(
+@query(
     "q_heavy_hitters_weighted",
     oracle="""
 WITH toks AS (
@@ -159,7 +141,7 @@ def q_heavy_hitters_weighted(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_heavy_hitters_by_group",
     oracle="""
 WITH counts AS (
@@ -200,7 +182,7 @@ def q_heavy_hitters_by_group(spark, sf_dir):
 # a pure function of doc_id, so DuckDB recomputes it bit-for-bit.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_weighted_sample",
     oracle="""
 WITH keyed AS (
@@ -245,7 +227,7 @@ def q_weighted_sample(spark, sf_dir):
 # sums only, so the result is engine-portable with no float contract.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_token_shards",
     oracle="""
 WITH p AS (
@@ -290,7 +272,7 @@ def q_token_shards(spark, sf_dir):
 # everything engine-portable.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_weighted_quantiles",
     oracle="""
 WITH agg AS (
@@ -341,7 +323,7 @@ def q_weighted_quantiles(spark, sf_dir):
 # re-derivable via ext/sketches.approx_quantiles_from_sketch.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_quantile_sketch",
     oracle="""
 WITH src AS (
@@ -411,7 +393,7 @@ def q_quantile_sketch(spark, sf_dir):
 # from the raw table — the round-trip must conserve both.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_tar_shards_roundtrip",
     oracle="""
 WITH p AS (
@@ -474,7 +456,7 @@ def q_tar_shards_roundtrip(spark, sf_dir):
 
 _HE_DIM = 16
 
-@staged(
+@query(
     "q_hashed_embedding",
     oracle=f"""
 WITH toks AS (
@@ -587,7 +569,7 @@ SELECT '{table}.{col}' AS col_name, CAST({_HLL_M} AS BIGINT) AS m,
 FROM ({sv}\n)"""
 
 
-@staged(
+@query(
     "q_hll_distinct",
     oracle="SELECT * FROM (\n"
     + "\nUNION ALL\n".join(
@@ -645,7 +627,7 @@ def q_hll_distinct(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_hll_state_merge",
     oracle=f"""
 WITH even_regs AS ({_hll_regs_sql("orders", "o_orderkey", "o_orderkey % 2 = 0")}
@@ -723,7 +705,7 @@ def _hll_est_of(src_regs: str) -> str:
     return f"(SELECT {_HLL_EST} FROM ({sv}\n))"
 
 
-@staged(
+@query(
     "q_hll_intersection",
     oracle=f"""
 WITH viewers AS ({_hll_regs_sql("events", "user_id", "event_type = 'view'")}
@@ -809,7 +791,7 @@ def q_hll_intersection(spark, sf_dir):
 # v = m - present, so only present (dims, bucket) rows ever shuffle.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_hll_by_group",
     oracle=f"""
 WITH regs AS (
@@ -895,7 +877,7 @@ def _seq_count_sql(steps: str) -> str:
             // {length} AS BIGINT)"""
 
 
-@staged(
+@query(
     "q_sequence_count",
     oracle=f"""
 WITH streams AS (
@@ -998,7 +980,7 @@ GROUP BY w.w0, w.w1, w.w2, w.w3
 """
 
 
-@staged(
+@query(
     "q_train_quality_lr",
     oracle=_lr_oracle(),
     description="Distributed full-batch gradient descent for a linear "
@@ -1051,7 +1033,7 @@ _WF_WINDOW_US = 30 * 60 * 1_000_000  # 30 minutes
 _WF_NEG = -(10**18)
 
 
-@staged(
+@query(
     "q_window_funnel",
     oracle=f"""
 WITH lev AS (
@@ -1129,7 +1111,7 @@ def q_window_funnel(spark, sf_dir):
 _BASKET_CAP = 1024
 
 
-@staged(
+@query(
     "q_triangle_count",
     oracle=f"""
 WITH ok AS (
@@ -1217,7 +1199,7 @@ def copurchase_edges(lineitem, basket_cap: int = _BASKET_CAP,
 # pattern so the float side stays engine-portable.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_l_diversity",
     oracle="""
 WITH cells AS (
@@ -1292,7 +1274,7 @@ def q_l_diversity(spark, sf_dir):
 # integer until one final division.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_model_auc",
     oracle="""
 WITH toks AS (
@@ -1362,7 +1344,7 @@ def q_model_auc(spark, sf_dir):
 _TEMP_TOKENS = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
 
 
-@staged(
+@query(
     "q_temperature_mixture",
     oracle=f"""
 WITH per_lang AS (
@@ -1445,7 +1427,7 @@ def q_temperature_mixture(spark, sf_dir):
 # ratios themselves vs local zlib is pinned in tests/test_properties.py.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_compression_ratio",
     oracle="""
 SELECT source,
@@ -1507,7 +1489,7 @@ def q_compression_ratio(spark, sf_dir):
 # rollup, all built-in expressions.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_retention",
     oracle="""
 WITH per_user AS (
@@ -1560,7 +1542,7 @@ def q_retention(spark, sf_dir):
 # state equals the oracle's CASE-mutated view of the source.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_cow_update",
     oracle="""
 SELECT CASE WHEN source = 'src3' THEN 'en' ELSE lang END AS lang,
@@ -1602,7 +1584,7 @@ def q_cow_update(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_cow_upsert",
     oracle="""
 WITH merged AS (
@@ -1657,7 +1639,7 @@ def q_cow_upsert(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_time_travel",
     oracle="""
 WITH v1 AS (
@@ -1712,7 +1694,7 @@ def q_time_travel(spark, sf_dir):
     return out.select("version", "n_docs", "n_en").orderBy("version")
 
 
-@staged(
+@query(
     "q_change_feed",
     oracle="""
 WITH changed AS (
@@ -1790,7 +1772,7 @@ def q_change_feed(spark, sf_dir):
 _ASOF_TOL_US = 30 * 60 * 1_000_000
 
 
-@staged(
+@query(
     "q_asof_forward_tolerance",
     oracle=f"""
 WITH views AS (
@@ -1853,7 +1835,7 @@ def q_asof_forward_tolerance(spark, sf_dir):
 # Pure bounded windows (per-key partitions), no custom code.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_scd2_intervals",
     bench=True,  # core20-r11 frozen tier (VERDICT r10 item 3)
     oracle="""
@@ -1980,7 +1962,7 @@ FROM sharded GROUP BY shard ORDER BY shard
 """
 
 
-@staged(
+@query(
     "q_curation_v2",
     oracle=_curation_v2_oracle(),
     description="Model-driven curation pipeline: 3-epoch GD training of "
@@ -2107,7 +2089,7 @@ FROM per_tok GROUP BY doc_id ORDER BY id
 """
 
 
-@staged(
+@query(
     "q_bpe_segment",
     oracle=_bpe_seg_oracle(),
     description="BPE segmentation (the tokenizer encode step, "
@@ -2139,7 +2121,7 @@ def q_bpe_segment(spark, sf_dir):
 # join: bucketing is physical, never semantic.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_bucketed_lake_join",
     oracle="""
 SELECT o_orderpriority,
@@ -2201,7 +2183,7 @@ def q_bucketed_lake_join(spark, sf_dir):
 # on exactly that state after one merge_cdc call.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_cdc_apply",
     oracle="""
 WITH final AS (
@@ -2261,7 +2243,7 @@ def q_cdc_apply(spark, sf_dir):
 # final state relationally — the projection must land on exactly that.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_projection_rollup",
     oracle="""
 WITH final AS (

@@ -95,51 +95,21 @@ def main() -> int:
     )
     from clickbom_spark.queries import REGISTRY
 
-    # --staged widens the sweep to the next round's pre-registered wave
-    args = [a for a in sys.argv[1:] if a != "--staged"]
+    args = sys.argv[1:]
     # ADVICE r10: an unknown --flag used to fall through into the name
     # filter, matching zero queries and exiting 0 — a vacuously green
     # gate.  Fail loudly instead.
     unknown = [a for a in args if a.startswith("--")]
     if unknown:
-        print(f"unknown flag(s): {' '.join(unknown)} (only --staged is valid)")
+        print(f"unknown flag(s): {' '.join(unknown)} (the script takes no flags)")
         return 2
-    queries = dict(REGISTRY)
-    if "--staged" in sys.argv[1:]:
-        # the r6..r12 waves are live in REGISTRY already; --staged
-        # adds pending holdouts not yet activated (r13/r14/r15 were
-        # pre-built during round 11; r16 during round 12)
-        from clickbom_spark.queries.staged_r13 import STAGED_R13
-
-        queries.update(STAGED_R13)
-        for mod, attr in (
-            ("staged_r14", "STAGED_R14"),
-            ("staged_r15", "STAGED_R15"),
-            ("staged_r16", "STAGED_R16"),
-            ("staged_r17", "STAGED_R17"),
-            ("staged_r18", "STAGED_R18"),
-            ("staged_r19", "STAGED_R19"),
-            ("staged_r20", "STAGED_R20"),
-        ):
-            try:
-                m = __import__(
-                    f"clickbom_spark.queries.{mod}", fromlist=[attr]
-                )
-            except ModuleNotFoundError as e:
-                # skip ONLY the not-yet-written wave; a broken import
-                # INSIDE an existing wave must fail the gate, not
-                # silently drop the wave (vacuously-green class)
-                if e.name == f"clickbom_spark.queries.{mod}":
-                    continue
-                raise
-            queries.update(getattr(m, attr))
     only = set(args)
-    missing = only - set(queries)
+    missing = only - set(REGISTRY)
     if missing:
         print(f"no such query name(s): {' '.join(sorted(missing))}")
         return 2
     fails, errs = [], []
-    for name, spec in queries.items():
+    for name, spec in REGISTRY.items():
         if only and name not in only:
             continue
         t0 = time.time()
@@ -148,9 +118,6 @@ def main() -> int:
         except Exception as e:
             errs.append(name)
             print(f"ERR  {name}: {type(e).__name__}: {str(e)[:200]}")
-            continue
-        if spec.oracle is None:
-            print(f"ROWS {name}: spark_rows={len(sdf)} ({time.time()-t0:.1f}s)")
             continue
         try:
             odf = run_oracle(spec.oracle, SF_DIR)
@@ -184,7 +151,7 @@ def main() -> int:
             print(f"ok   {name} rows={len(sdf)} ({time.time()-t0:.1f}s)")
     print(
         f"\n== {len(fails)} fail, {len(errs)} err "
-        f"of {len(only) or len(queries)} checked =="
+        f"of {len(only) or len(REGISTRY)} checked =="
     )
     if fails:
         print("FAILS:", " ".join(fails))

@@ -11,7 +11,7 @@ import zipfile
 
 import pytest
 
-from clickbom_spark.io.clickhouse import ClickHouseSink, DDL_TEMPLATE
+from clickbom_spark.io.clickhouse import ClickHouseError, ClickHouseSink, DDL_TEMPLATE
 from clickbom_spark.io.sources import (
     MendClient,
     SourceError,
@@ -330,6 +330,45 @@ def test_clickhouse_insert_tsv_end_to_end(spark, tmp_path):
         assert "a\\tb" in body and "L\\n2" in body  # TSV escaping
     finally:
         srv.shutdown()
+
+
+def test_clickhouse_http_error_reply_raises_clickhouse_error():
+    """A 4xx/5xx reply from the real HTTP transport surfaces as
+    ClickHouseError naming the query and carrying ClickHouse's error
+    text, not as a bare urllib HTTPError that drops the body."""
+    import http.server
+    import threading
+
+    reply = b"Code: 60. DB::Exception: Unknown table expression identifier 'system.tables'"
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_POST(self):
+            self.rfile.read(int(self.headers.get("Content-Length", 0)))
+            self.send_response(500)
+            self.send_header("Content-Length", str(len(reply)))
+            self.end_headers()
+            self.wfile.write(reply)
+
+        def log_message(self, *a):
+            pass
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        from clickbom_spark.io.clickhouse import http_transport
+
+        sink = ClickHouseSink(
+            http_transport(f"http://127.0.0.1:{srv.server_port}"), "db", "t"
+        )
+        with pytest.raises(ClickHouseError) as err:
+            sink.setup()
+        msg = str(err.value)
+        assert "(500)" in msg
+        assert "FROM system.tables WHERE database = 'db'" in msg
+        assert "DB::Exception: Unknown table expression" in msg
+    finally:
+        srv.shutdown()
+        srv.server_close()
 
 
 def test_lake_schema_evolution_merge(spark, tmp_path):

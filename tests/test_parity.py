@@ -1,9 +1,8 @@
 """Oracle-parity harness — mirrors the driver's correctness gate.
 
-For every registered query with an oracle: run the Spark implementation
-and the DuckDB oracle SQL on the same parquet tables, then compare row
-count, column names, and (order-insensitively) exact values.  Queries
-without an oracle get a rows-only smoke check.
+For every registered query: run the Spark implementation and the DuckDB
+oracle SQL on the same parquet tables, then compare row count, column
+names, and (order-insensitively) exact values.
 """
 
 from __future__ import annotations
@@ -14,7 +13,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from clickbom_spark.queries import REGISTRY
+from clickbom_spark.queries import REGISTRY, query
 from tests.conftest import SF_CORRECT
 
 TABLES = [
@@ -65,14 +64,55 @@ _SLOW_PARITY = {"q_stream_neardup_filter", "q_stream_scd2_incremental"}
 
 ORACLE_QUERIES = [
     pytest.param(n, marks=pytest.mark.slow) if n in _SLOW_PARITY else n
-    for n in sorted(n for n, s in REGISTRY.items() if s.oracle)
+    for n in sorted(REGISTRY)
 ]
-ROWS_ONLY_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
+
+
+def test_query_rejects_duplicate_name():
+    """Registration is the only way into REGISTRY, so a second module
+    claiming a live name fails at import time instead of silently
+    rebinding it."""
+    name, spec = next(iter(REGISTRY.items()))
+    with pytest.raises(ValueError, match="already registered"):
+        query(name, oracle="SELECT 1 AS x")(lambda spark, sf_dir: None)
+    assert REGISTRY[name] is spec
+
+
+def test_query_requires_oracle():
+    for oracle in (None, "", "   "):
+        with pytest.raises(ValueError, match="oracle"):
+            query("q_without_oracle", oracle=oracle)
+    assert "q_without_oracle" not in REGISTRY
+
+
+def module_queries(module: str) -> dict:
+    """The REGISTRY entries whose function is defined in
+    ``clickbom_spark.queries.<module>``, by name."""
+    full = f"clickbom_spark.queries.{module}"
+    return {n: s for n, s in REGISTRY.items() if s.fn.__module__ == full}
+
+
+def unregistered_functions(module: str) -> list[str]:
+    """The top-level ``q_*`` functions of ``clickbom_spark.queries.<module>``
+    that no REGISTRY entry calls (a query missing its ``@query``)."""
+    import importlib
+    import inspect
+
+    mod = importlib.import_module(f"clickbom_spark.queries.{module}")
+    live = {id(s.fn) for s in REGISTRY.values()}
+    return sorted(
+        n for n, f in vars(mod).items()
+        if n.startswith("q_") and inspect.isfunction(f)
+        and f.__module__ == mod.__name__ and id(f) not in live
+    )
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity(spark, name):
-    spec = REGISTRY[name]
+    check_oracle_parity(spark, REGISTRY[name])
+
+
+def check_oracle_parity(spark, spec) -> None:
     sdf = spec.fn(spark, SF_CORRECT).toPandas()
     odf = run_oracle(spec.oracle, SF_CORRECT)
     assert sorted(sdf.columns) == sorted(odf.columns), (
@@ -92,14 +132,6 @@ def test_oracle_parity(spark, name):
             f"value mismatch in columns {diff_cols}\n"
             f"spark head:\n{s.head(5)}\noracle head:\n{o.head(5)}"
         )
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
-def test_rows_only(spark, name):
-    spec = REGISTRY[name]
-    df = spec.fn(spark, SF_CORRECT)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
 
 
 def test_bm25_zero_token_doc_parity(spark, tmp_path):
@@ -126,3 +158,4 @@ def test_bm25_zero_token_doc_parity(spark, tmp_path):
     pd.testing.assert_frame_equal(
         canon(sdf), canon(odf), check_dtype=False, check_exact=True
     )
+

@@ -213,7 +213,7 @@ def test_dedup_preserves_distinct_sources(spark):
         ],
         "name string, version string, license string, source string, purl string",
     )
-    out = M.dedup_components(comps, deterministic=True).collect()
+    out = M.dedup_components(comps).collect()
     keys = sorted((r["name"], r["version"], r["purl"], r["source"]) for r in out)
     assert keys == [
         ("lodash", "4.17.21", "pkg:npm/lodash@4.17.21", "repo-a"),
@@ -230,9 +230,7 @@ def test_merge_pipeline_end_to_end(spark):
         merge=True,
         license_mappings_path=fx("license-mappings-sample.json"),
     )
-    out = merge_pipeline(
-        spark, FIXTURES, cfg, output_key="merged-output.json", deterministic=True
-    )
+    out = merge_pipeline(spark, FIXTURES, cfg, output_key="merged-output.json")
     rows = out.collect()
     by_key = {(r["name"], r["version"], r["source"]): r for r in rows}
 
@@ -257,10 +255,8 @@ def test_merge_pipeline_end_to_end(spark):
 def test_merge_idempotence(spark):
     """merge(merge(x)) == merge(x) — SURVEY §5 property."""
     cfg = PipelineConfig(merge=True)
-    once = merge_pipeline(
-        spark, FIXTURES, cfg, output_key="merged-output.json", deterministic=True
-    )
-    again = M.dedup_components(once, deterministic=True)
+    once = merge_pipeline(spark, FIXTURES, cfg, output_key="merged-output.json")
+    again = M.dedup_components(once)
     a = sorted(map(tuple, once.collect()))
     b = sorted(map(tuple, again.collect()))
     assert a == b
@@ -268,9 +264,7 @@ def test_merge_idempotence(spark):
 
 def test_assemble_merged_doc_golden(spark):
     cfg = PipelineConfig(merge=True)
-    comps = merge_pipeline(
-        spark, FIXTURES, cfg, output_key="merged-output.json", deterministic=True
-    )
+    comps = merge_pipeline(spark, FIXTURES, cfg, output_key="merged-output.json")
     doc = M.assemble_merged_doc(
         comps,
         serial_number="urn:uuid:00000000-0000-0000-0000-000000000000",

@@ -1,47 +1,38 @@
-"""Round-6 staged-wave activation guards.
-
-Pre-activation this file ran the full DuckDB oracle-parity harness over
-clickbom_spark.queries.staged.STAGED while those queries were held out
-of the live REGISTRY.  Round 6 flipped the switch
-(queries/__init__.py: ``REGISTRY.update(staged.STAGED)``), so the main
-tests/test_parity.py harness now covers every staged query directly —
-re-running the identical comparison here would only double the suite's
-runtime.  What remains are the activation invariants: the wave is live,
-nothing was shadowed, and the rows-only sketch query's self-reported
-error bounds still hold.
-"""
+"""Registration checks and query laws for the queries defined in
+``clickbom_spark/queries/staged.py``.  Their oracle parity runs in
+tests/test_parity.py::test_oracle_parity."""
 
 from __future__ import annotations
 
-from clickbom_spark.queries import REGISTRY
-from clickbom_spark.queries.staged import STAGED
+import pytest
+
+from clickbom_spark.queries import REGISTRY, query
 from tests.conftest import SF_CORRECT
+from tests.test_parity import module_queries, unregistered_functions
+
+QUERIES = module_queries("staged")
 
 
 def test_staged_wave_is_live():
-    """Every staged query is registered, with the exact same spec
-    object — activation is REGISTRY.update(STAGED), not a re-wrap."""
-    missing = set(STAGED) - set(REGISTRY)
-    assert not missing, f"staged queries not activated: {missing}"
-    for name, spec in STAGED.items():
-        assert REGISTRY[name] is spec, f"{name} was shadowed on activation"
+    """Every query function staged.py defines is registered."""
+    assert QUERIES
+    assert not unregistered_functions("staged")
 
 
 def test_activation_did_not_shadow_live_queries():
-    """STAGED names were disjoint from the organic registry at
-    activation time; the merged registry still satisfies the driver
-    contract (unique names, callable fns, oracle strings or None)."""
-    for name, spec in REGISTRY.items():
-        assert callable(spec.fn), name
-        assert spec.oracle is None or isinstance(spec.oracle, str), name
-        assert spec.name == name
+    """A second registration of any staged.py name is refused and
+    leaves the registered spec in place."""
+    for name, spec in QUERIES.items():
+        with pytest.raises(ValueError, match="already registered"):
+            query(name, oracle=spec.oracle)(spec.fn)
+        assert REGISTRY[name] is spec
 
 
 def test_quantile_sketch_query_reports_tight_bounds(spark):
     """The sketch query's invariant columns (now oracle-asserted as
     constants) must actually hold: weight conservation and rank error
     within the KLL guarantee band at k=256."""
-    rows = STAGED["q_quantile_sketch"].fn(spark, SF_CORRECT).collect()
+    rows = QUERIES["q_quantile_sketch"].fn(spark, SF_CORRECT).collect()
     assert len(rows) == 3
     for r in rows:
         assert r["weight_conserved"] is True

@@ -1,50 +1,30 @@
-"""Oracle parity for the round-10 staged wave (held OUT of REGISTRY
-until round-10 activation — see staged_r10.py module doc).  Mirrors
-the driver's CORRECTNESS gate at sf0.001/sf0.01 via the shared
-canon/run_oracle harness; scripts/strict_parity.py --staged widens the
-sweep to sf0.1."""
+"""Oracle parity and registration checks for the queries defined in
+``clickbom_spark/queries/staged_r10.py``."""
 
 from __future__ import annotations
 
 import pytest
 
-from clickbom_spark.queries import REGISTRY
-from clickbom_spark.queries.staged_r10 import STAGED_R10
-from tests.conftest import SF_CORRECT
-from tests.test_parity import canon, run_oracle
+from tests.test_parity import (
+    check_oracle_parity,
+    module_queries,
+    unregistered_functions,
+)
 
-ORACLE_STAGED = sorted(n for n, s in STAGED_R10.items() if s.oracle)
-ROWS_ONLY_STAGED = sorted(n for n, s in STAGED_R10.items() if s.oracle is None)
+QUERIES = module_queries("staged_r10")
 
 
-@pytest.mark.parametrize("name", ORACLE_STAGED)
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_staged_r10_oracle_parity(spark, name):
-    import pandas as pd
-
-    spec = STAGED_R10[name]
-    got = canon(spec.fn(spark, SF_CORRECT).toPandas())
-    want = canon(run_oracle(spec.oracle, SF_CORRECT))
-    assert list(got.columns) == list(want.columns), (
-        f"{name} columns: {list(got.columns)} != {list(want.columns)}"
-    )
-    assert len(got) == len(want), f"{name} rows: {len(got)} != {len(want)}"
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
+    check_oracle_parity(spark, QUERIES[name])
 
 
 def test_staged_r10_activated_into_registry():
-    """Round-10 activation: every staged name is live and IS the staged
-    object — activation was REGISTRY.update(STAGED_R10), not a re-wrap."""
-    missing = set(STAGED_R10) - set(REGISTRY)
-    assert not missing, f"staged r10 names not activated: {missing}"
-    for name, spec in STAGED_R10.items():
-        assert REGISTRY[name] is spec, f"{name} was shadowed on activation"
-        assert callable(spec.fn), name
-        assert spec.oracle is None or isinstance(spec.oracle, str), name
-        assert spec.name == name
+    """Every query function staged_r10.py defines is registered."""
+    assert QUERIES
+    assert not unregistered_functions("staged_r10")
 
 
 def test_staged_r10_every_query_has_oracle():
-    """Round-7 lesson (VERDICT r7 item 2): deliberately-oracle-less
-    queries burn driver verification slots.  The r10 wave ships fully
-    oracle-backed."""
-    assert not ROWS_ONLY_STAGED
+    for name, spec in QUERIES.items():
+        assert isinstance(spec.oracle, str) and spec.oracle.strip(), name
